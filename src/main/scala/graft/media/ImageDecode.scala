@@ -6,7 +6,8 @@ import java.io.ByteArrayInputStream
   * of `load_image` (`/root/reference/src/churro_ocr/_internal/image.py:20-29`:
   * open + `ImageOps.exif_transpose`), on a bare JVM:
   *
-  *  - PNG/JPEG/BMP/GIF decode via `javax.imageio` into row-major RGB bytes
+  *  - native PNG decode ([[PngDecode]]: PIL `convert("RGB")` semantics);
+  *    JPEG/BMP/GIF via `javax.imageio`; both into row-major RGB bytes
   *    (differentially verified against PNGs and pixel digests produced by an
   *    independent pure-Python encoder, tools/gen_media_fixture.py);
   *  - EXIF orientation parse (JPEG APP1 → TIFF IFD0 tag 0x0112, both byte
@@ -25,7 +26,9 @@ object ImageDecode {
   val MaxPixels: Long = 2L * 89478485L
 
   /** Decode to 8-bit RGB, row-major [r,g,b]* (alpha dropped, like the
-    * reference's `ensure_rgb`).
+    * reference's `ensure_rgb`). PNG goes through [[PngDecode]]; every other
+    * format through `javax.imageio`, read from memory (a stream-backed
+    * ImageInputStream would spool each payload to a temp file).
     *
     * Hostile-input contract: malformed payloads only ever throw
     * `IllegalArgumentException`. The JDK codecs escape with IIOException
@@ -34,10 +37,13 @@ object ImageDecode {
     * bad image fails one ROW loudly instead of killing the task with an
     * untyped error no caller can distinguish from an engine bug.
     */
-  def decode(bytes: Array[Byte]): Decoded = {
+  def decode(bytes: Array[Byte]): Decoded =
+    if (PngDecode.isPng(bytes)) PngDecode.decode(bytes) else decodeImageIO(bytes)
+
+  private def decodeImageIO(bytes: Array[Byte]): Decoded = {
     val img =
       try {
-        val iis = javax.imageio.ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
+        val iis = new javax.imageio.stream.MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
         try {
           val readers = javax.imageio.ImageIO.getImageReaders(iis)
           require(readers.hasNext, "undecodable image payload")

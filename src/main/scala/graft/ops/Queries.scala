@@ -2174,8 +2174,9 @@ object Queries {
   }
 
   /** Real image decode over a binaryFile scan: `load_image` parity
-    * (`_internal/image.py:20-29` — ImageIO decode + EXIF orientation
-    * normalize) in a typed map, with the base64 data-URI transport encode
+    * (`_internal/image.py:20-29` — native PNG decode (PIL `convert("RGB")`
+    * semantics); JPEG/BMP/GIF via ImageIO; + EXIF orientation normalize) in
+    * a typed map, with the base64 data-URI transport encode
     * (`image.py:56-66`) and digests as NATIVE expressions. Reads the
     * repo-committed PNG fixtures; the oracle's expected pixel digests were
     * produced by an independent pure-Python encoder before the PNGs ever

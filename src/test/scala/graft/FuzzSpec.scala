@@ -45,6 +45,16 @@ class FuzzSpec extends AnyFunSuite {
         fail(s"$label escaped with ${e.getClass.getName}: ${e.getMessage}")
     }
 
+  /** [[legal]] plus a wall-time bound: a decoder must finish each input
+    * within its work budget, well inside this on any host.
+    */
+  private def bounded(label: String, limitMs: Long = 2000)(body: => Unit): Unit = {
+    val t0 = System.nanoTime()
+    legal(label)(body)
+    val ms = (System.nanoTime() - t0) / 1000000
+    assert(ms <= limitMs, s"$label took $ms ms (bound $limitMs ms)")
+  }
+
   test("WARC reader: random soup and mutated valid captures only ever throw IAE") {
     val valid = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/test/resources/media/warc/sample_01.warc.gz"))
@@ -211,9 +221,9 @@ class FuzzSpec extends AnyFunSuite {
     val jpgSig = Array(0xff, 0xd8, 0xff, 0xe0).map(_.toByte)
     (0 until 150).foreach { k =>
       val b = randBytes(0x1ac0de00L + k, 32 + k * 5)
-      legal(s"img soup $k")(ImageDecode.loadImage(b))
-      legal(s"img png-soup $k")(ImageDecode.loadImage(pngSig ++ b))
-      legal(s"img jpg-soup $k")(ImageDecode.loadImage(jpgSig ++ b))
+      bounded(s"img soup $k")(ImageDecode.loadImage(b))
+      bounded(s"img png-soup $k")(ImageDecode.loadImage(pngSig ++ b))
+      bounded(s"img jpg-soup $k")(ImageDecode.loadImage(jpgSig ++ b))
     }
     // single-byte mutations of a real PNG fixture and of a real JPEG
     // carrying a spliced EXIF APP1 — chunk CRCs, IDAT deflate, TIFF IFDs
@@ -229,7 +239,7 @@ class FuzzSpec extends AnyFunSuite {
       val pos = ((mix(0x5eed + k.toLong) >>> 1) % src.length).toInt
       val m = src.clone()
       m(pos) = (m(pos) ^ (1 + (mix(k.toLong) & 0x7f))).toByte
-      legal(s"img $label mutation @$pos")(ImageDecode.loadImage(m))
+      bounded(s"img $label mutation @$pos")(ImageDecode.loadImage(m))
       // exifOrientation is TOTAL by contract (malformed → 1, like PIL):
       // it must RETURN in range, never throw at all
       val o = ImageDecode.exifOrientation(m)
@@ -244,6 +254,59 @@ class FuzzSpec extends AnyFunSuite {
       val o = ImageDecode.orientationFromExifPayload(seg)
       assert(o >= 0 && o <= 8, s"payload soup $k = $o")
     }
+  }
+
+  test("PNG decoder: mutated palette, interlaced and 16-bit PNGs only ever throw IAE, in bounded time") {
+    import graft.media.ImageDecode
+    // each byte flip is tried as is (the CRC check catches it) and with the
+    // chunk CRCs recomputed, so it reaches IHDR validation, inflate, the row
+    // filters and the sample unpacking
+    Seq("pal8_trns", "pal4_short", "adam7_rgb8", "adam7_gray2", "rgb16", "graya16").foreach { name =>
+      val valid = java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"src/test/resources/media/pngtypes/$name.png"))
+      assert(ImageDecode.decode(valid).width > 0) // the base file IS valid
+      (0 until 200).foreach { k =>
+        val pos = 8 + ((mix(0x9a7eL * (k + 1) + name.hashCode) >>> 1) % (valid.length - 8)).toInt
+        val m = valid.clone()
+        m(pos) = (m(pos) ^ (1 + (mix(k.toLong + 3) & 0x7f))).toByte
+        bounded(s"$name mutation @$pos")(ImageDecode.decode(m))
+        bounded(s"$name crc-fixed mutation @$pos")(ImageDecode.decode(PngBytes.fixCrcs(m)))
+      }
+    }
+  }
+
+  test("PNG inflate bomb: IDAT past the declared raster is rejected after one extra byte") {
+    import graft.media.ImageDecode
+    // 64x64 RGB8 declares 64 * (1 + 192) = 12352 raster bytes; the IDAT is
+    // a valid zlib stream of 1 GiB of zeros (a raster of filter-0 black
+    // rows, then ~1 GiB more): one sync-flushed deflate segment of 1 MiB of
+    // zeros, repeated 1024 times (every segment only copies zeros already
+    // written), a final empty block and the Adler-32 of 2^30 zeros
+    val raster = 64 * (1 + 64 * 3)
+    val d = new java.util.zip.Deflater(java.util.zip.Deflater.BEST_COMPRESSION, true)
+    d.setInput(new Array[Byte](1 << 20))
+    val buf = new Array[Byte](1 << 16)
+    val seg = new java.io.ByteArrayOutputStream()
+    var k = buf.length
+    while (k == buf.length) {
+      k = d.deflate(buf, 0, buf.length, java.util.zip.Deflater.SYNC_FLUSH)
+      seg.write(buf, 0, k)
+    }
+    d.end()
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(0x78); out.write(0xda)
+    (0 until 1024).foreach(_ => seg.writeTo(out))
+    out.write(0x03); out.write(0x00)
+    val adler = (((1L << 30) % 65521) << 16) | 1
+    out.write(java.nio.ByteBuffer.allocate(4).putInt(adler.toInt).array())
+    val bomb = PngBytes.Signature ++ PngBytes.ihdr(64, 64, 8, 2) ++
+      PngBytes.chunk("IDAT", out.toByteArray) ++ PngBytes.chunk("IEND", Array.empty)
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalArgumentException](ImageDecode.decode(bomb))
+    val ms = (System.nanoTime() - t0) / 1000000
+    val inflated = """inflated (\d+) bytes""".r.findFirstMatchIn(e.getMessage).map(_.group(1).toLong)
+    assert(inflated.exists(_ <= raster + 1), e.getMessage)
+    assert(ms < 1000, s"bomb rejection took $ms ms")
   }
 
   test("GFV1 video container: soup and mutated containers only ever throw IAE") {

@@ -3,7 +3,8 @@ package graft
 import graft.media.ImageDecode
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Real decode path: PNG pixels vs the independent Python fixture digests,
+/** Real decode path: PNG pixels vs the independent Python fixture digests
+  * (every colour type, bit depth and layout, PIL `convert("RGB")` rules),
   * EXIF orientation parse (both TIFF byte orders) and all eight PIL
   * `exif_transpose` transforms, verified end-to-end on a real ImageIO JPEG
   * with a spliced APP1 segment.
@@ -145,20 +146,76 @@ class ImageDecodeSpec extends AnyFunSuite {
     // a syntactically valid PNG signature + IHDR declaring 100000×100000
     // (30 GB of RGB) in ~60 bytes — the guard must fire off the header
     // dims without ever inflating pixel data
-    def chunk(typ: String, payload: Array[Byte]): Array[Byte] = {
-      val len = java.nio.ByteBuffer.allocate(4).putInt(payload.length).array()
-      val body = typ.getBytes("ISO-8859-1") ++ payload
-      val crc = new java.util.zip.CRC32(); crc.update(body)
-      len ++ body ++ java.nio.ByteBuffer.allocate(4).putInt(crc.getValue.toInt).array()
-    }
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-      .putInt(100000).putInt(100000).put(8.toByte).put(2.toByte)
-      .put(0.toByte).put(0.toByte).put(0.toByte).array()
-    val bomb = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte) ++
-      chunk("IHDR", ihdr) ++ chunk("IDAT", Array[Byte](0x78, 0x9c.toByte)) ++
-      chunk("IEND", Array.empty)
+    val bomb = PngBytes.Signature ++ PngBytes.ihdr(100000, 100000, 8, 2) ++
+      PngBytes.chunk("IDAT", Array[Byte](0x78, 0x9c.toByte)) ++ PngBytes.chunk("IEND", Array.empty)
     val e = intercept[IllegalArgumentException](ImageDecode.decode(bomb))
     assert(e.getMessage.contains("decompression bomb"))
+    // the check runs on IHDR itself: a corrupt chunk after it is never reached
+    val tail = PngBytes.chunk("IDAT", Array[Byte](1, 2, 3))
+    tail(tail.length - 1) = (tail(tail.length - 1) ^ 1).toByte
+    val e2 = intercept[IllegalArgumentException](
+      ImageDecode.decode(PngBytes.Signature ++ PngBytes.ihdr(100000, 100000, 8, 2) ++ tail))
+    assert(e2.getMessage.contains("decompression bomb"))
+  }
+
+  /** (name, width, height, sha256 of the expected RGB) from tools/gen_media_fixture.py. */
+  private lazy val pngTypes: Seq[(String, Int, Int, String)] =
+    scala.io.Source.fromFile(s"$mediaDir/pngtypes/expected.tsv").getLines().map { l =>
+      val f = l.split('\t'); (f(0), f(1).toInt, f(2).toInt, f(3))
+    }.toVector
+
+  private def imageIoRgb(bytes: Array[Byte]): Seq[Byte] = {
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    img.getRGB(0, 0, img.getWidth, img.getHeight, null, 0, img.getWidth).toSeq
+      .flatMap(p => Seq((p >> 16).toByte, (p >> 8).toByte, p.toByte))
+  }
+
+  test("every PNG colour type, bit depth, interlace, IDAT split and filter decodes to PIL RGB") {
+    assert(pngTypes.size == 20)
+    pngTypes.foreach { case (name, w, h, sha) =>
+      val d = ImageDecode.decode(pngBytes(s"pngtypes/$name.png"))
+      assert((d.width, d.height) == ((w, h)), name)
+      assert(ImageDecode.sha256Hex(d.rgb) == sha, s"$name: RGB differs from the PIL rule")
+    }
+  }
+
+  test("RGB8, RGBA8 and palette PNGs decode byte-identical to ImageIO") {
+    val unchanged = Seq("pal1", "pal4_short", "pal8", "pal8_trns", "rgba8", "adam7_rgb8", "multi_idat", "filters_rgb8", "large_rgb8")
+      .map(n => s"pngtypes/$n.png") ++ (0 to 4).map(i => f"img_$i%02d.png") ++
+      Seq("base", "bright", "checker", "moved", "noise", "vgrad").map(n => s"phash/ph_$n.png")
+    unchanged.foreach { n =>
+      val b = pngBytes(n)
+      assert(ImageDecode.decode(b).rgb.toSeq == imageIoRgb(b), n)
+    }
+  }
+
+  test("gray and 16-bit PNGs decode to PIL values, not ImageIO's gamma-mapped ones") {
+    // one row of 8-bit gray 0, 1, 128, 255 (filter byte 0 first)
+    val gray = PngBytes.png(4, 1, 8, 0, Array[Byte](0, 0, 1, 128.toByte, 255.toByte))
+    assert(ImageDecode.decode(gray).rgb.map(_ & 0xff).toSeq ==
+      Seq(0, 0, 0, 1, 1, 1, 128, 128, 128, 255, 255, 255))
+    assert(imageIoRgb(gray) != ImageDecode.decode(gray).rgb.toSeq) // ImageIO: 1 -> 13, 128 -> 188
+    // one 16-bit RGB pixel 0xB533 0x00FF 0xFF80: each sample keeps its high byte
+    val rgb16 = PngBytes.png(1, 1, 16, 2,
+      Array(0, 0xb5, 0x33, 0x00, 0xff, 0xff, 0x80).map(_.toByte))
+    assert(ImageDecode.decode(rgb16).rgb.map(_ & 0xff).toSeq == Seq(0xb5, 0x00, 0xff))
+    // 16-bit gray keeps the high byte too
+    val gray16 = PngBytes.png(2, 1, 16, 0, Array(0, 0xb5, 0x33, 0x01, 0xff).map(_.toByte))
+    assert(ImageDecode.decode(gray16).rgb.map(_ & 0xff).toSeq == Seq(0xb5, 0xb5, 0xb5, 1, 1, 1))
+  }
+
+  test("malformed PNG structure is rejected with a typed reason") {
+    val ok = PngBytes.png(2, 2, 8, 0, Array[Byte](0, 1, 2, 0, 3, 4))
+    assert(ImageDecode.decode(ok).rgb.length == 12)
+    def reason(b: Array[Byte]): String = intercept[IllegalArgumentException](ImageDecode.decode(b)).getMessage
+    val badCrc = ok.clone(); badCrc(29) = (badCrc(29) ^ 1).toByte // last IHDR CRC byte
+    assert(reason(badCrc).contains("CRC mismatch"))
+    assert(reason(PngBytes.png(2, 2, 8, 0, Array[Byte](0, 1, 2, 5, 3, 4))).contains("row filter type 5"))
+    assert(reason(PngBytes.png(2, 2, 8, 0, Array[Byte](0, 1, 2, 0))).contains("IDAT"))
+    assert(reason(PngBytes.png(2, 2, 8, 0, new Array[Byte](7))).contains("past the 6-byte raster"))
+    assert(reason(PngBytes.png(2, 2, 3, 0, new Array[Byte](6))).contains("bit depth 3"))
+    assert(reason(PngBytes.png(2, 2, 8, 3, new Array[Byte](6))).contains("without PLTE"))
+    assert(reason(ok.take(40)).contains("truncated chunk"))
   }
 
   test("PNG round-trip: encodePng output decodes back to identical pixels") {

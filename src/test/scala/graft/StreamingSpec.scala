@@ -266,4 +266,14 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     override def getCurrentWatermarkMs(): Long = 0L
     override def getCurrentProcessingTimeMs(): Long = 0L
   }
+
+  test("stream state partitions: an unsizable source saturates to the cap, even fanned out") {
+    // getContentSummary fails on a missing path; the Long.MaxValue sentinel
+    // times the near-dup fanout used to wrap negative and yield 1 partition
+    val missing = "/nonexistent/graft-stream-source.parquet"
+    Seq(1, 32).foreach { fanout =>
+      val ss = StreamOps.streamSession(spark, missing, fanout)
+      assert(ss.conf.get("spark.sql.shuffle.partitions") == "4", s"fanout $fanout")
+    }
+  }
 }
