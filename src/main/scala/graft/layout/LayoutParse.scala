@@ -35,6 +35,21 @@ object LayoutParse {
 
   private val contdToken = "<|txt_contd_tgt|>"
 
+  /** An ASCII digit run as a coordinate, saturating at 1001: anything past
+    * 1000 is out of range and [[BBoxOps.convert]] drops the block, as the
+    * reference's `int()` + `_convert_bbox` do — `toInt` would throw on a
+    * run past `Int.MaxValue`.
+    */
+  private def coord(digits: String): Int = {
+    var v = 0
+    var i = 0
+    while (i < digits.length) {
+      v = math.min(v * 10 + (digits.charAt(i) - '0'), 1001)
+      i += 1
+    }
+    v
+  }
+
   def looksLikeLayout(text: String): Boolean = text.contains("<|box_start|>")
 
   def parse(output: String, mediaRef: String = ""): Vector[Block] = {
@@ -42,7 +57,7 @@ object LayoutParse {
     val m = layoutRe.matcher(output)
     while (m.find()) {
       val bbox = BBoxOps.convert(
-        m.group(1).toInt, m.group(2).toInt, m.group(3).toInt, m.group(4).toInt)
+        coord(m.group(1)), coord(m.group(2)), coord(m.group(3)), coord(m.group(4)))
       val refType = PyStr.lower(m.group(5))
       if (bbox.isDefined && refType != "inline_formula" && Blocks.SupportedTypes.contains(refType)) {
         val angle = Option(m.group(6)).flatMap(angleMapping.get).getOrElse(0)

@@ -60,11 +60,12 @@ object PageSegment {
     * executor density the segmentation+OCR chain is MEMORY-BANDWIDTH
     * bound (BENCH.md §12: the Boolean-mask build lost 31% N→4N
     * efficiency; bit-packing with word-level row scans recovered it).
+    * Column questions are word-level too: one pass ORs a box's row
+    * slices into a column-occupancy profile (`columnProfile`).
     */
   final class Mask(val words: Array[Long]) {
     @inline def apply(i: Int): Boolean =
       (words(i >>> 6) & (1L << i)) != 0 // JVM masks the shift to i & 63
-    @inline def set(i: Int): Unit = words(i >>> 6) |= 1L << i
     /** Any bit set in [from, until)? Word-at-a-time — a blank gap row
       * costs w/64 reads, not w.
       */
@@ -105,26 +106,119 @@ object PageSegment {
     }
   }
 
-  /** Ink mask by integer luma, row-major w×h. */
+  /** Ink mask by integer luma, row-major w×h: each 64-pixel word is built
+    * in a register and stored once. `luma / 1000 < 128` is tested as
+    * `299·r + 587·g + 114·b < 128000`, and because the weights sum to 1000
+    * pixels whose bytes all have the high bit set are paper and pixels
+    * whose bytes all lack it are ink. So a word whose 192 bytes (24 `Long`
+    * reads) all have it is skipped, an 8-pixel group (3 reads) settles as a
+    * whole when its 24 bytes agree, and only pixels with mixed high bits
+    * pay the arithmetic.
+    */
   def inkMask(img: Decoded): Mask = {
     val n = img.width * img.height
-    val m = new Mask(new Array[Long]((n + 63) >>> 6))
-    var i = 0
+    val rgb = img.rgb
+    val le = java.nio.ByteBuffer.wrap(rgb).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val words = new Array[Long]((n + 63) >>> 6)
+    val full = n >>> 6 // words whose 64 pixels are all present
+    var wi = 0
+    while (wi < full) {
+      val base = wi * 192
+      var paper = HighBits
+      var j = 0
+      while (j < 192) { paper &= le.getLong(base + j); j += 8 }
+      if (paper != HighBits) { // not all 64 pixels paper: group by group
+        var word = 0L
+        var o = base
+        var sh = 0
+        while (sh < 64) {
+          val a = le.getLong(o)
+          val b = le.getLong(o + 8)
+          val c = le.getLong(o + 16)
+          if ((a & b & c & HighBits) != HighBits)
+            word |= (if (((a | b | c) & HighBits) == 0) 0xffL else groupInk(rgb, o, a, b, c)) << sh
+          o += 24
+          sh += 8
+        }
+        words(wi) = word
+      }
+      wi += 1
+    }
+    var i = full << 6 // the last n % 64 pixels
     while (i < n) {
-      val o = i * 3
-      if (graft.media.ImageDecode.lumaInt(img.rgb, o) < 128) m.set(i)
+      if (isInk(rgb, i * 3)) words(i >>> 6) |= 1L << i
       i += 1
     }
-    m
+    new Mask(words)
   }
+
+  private final val HighBits = 0x8080808080808080L
+
+  @inline private def isInk(rgb: Array[Byte], o: Int): Boolean =
+    299 * (rgb(o) & 0xff) + 587 * (rgb(o + 1) & 0xff) + 114 * (rgb(o + 2) & 0xff) < 128000
+
+  /** Ink bits of the 8 pixels at byte offset `o`, read as the little-endian
+    * `a`, `b`, `c`; first pixel lowest. A pixel whose 3 bytes agree on the
+    * high bit is settled by it, as a whole group is; the rest pay the sum.
+    */
+  private def groupInk(rgb: Array[Byte], o: Int, a: Long, b: Long, c: Long): Long = {
+    val high = highBits(a) | highBits(b) << 8 | highBits(c) << 16
+    var bits = 0L
+    var k = 0
+    while (k < 8) {
+      val t = (high >>> (3 * k)) & 7
+      if (t == 0 || (t != 7 && isInk(rgb, o + 3 * k))) bits |= 1L << k
+      k += 1
+    }
+    bits
+  }
+
+  /** The high bit of each byte of `x`, byte i's at bit i. */
+  @inline private def highBits(x: Long): Int =
+    (((x & HighBits) * 0x0002040810204081L) >>> 56).toInt
 
   private def rowHasInk(ink: Mask, w: Int, b: Box, y: Int): Boolean =
     ink.anySet(y * w + b.x0, y * w + b.x1)
 
-  private def colHasInk(ink: Mask, w: Int, b: Box, x: Int): Boolean = {
+  /** Column occupancy of `b`: bit x − b.x0 is set iff column x has ink in
+    * rows [b.y0, b.y1) — the OR of the rows' word-aligned slices, one pass
+    * over h·w/64 words instead of a bit read per pixel per column probe.
+    */
+  private def columnProfile(ink: Mask, w: Int, b: Box): Array[Long] = {
+    val bw = b.width
+    val prof = new Array[Long]((bw + 63) >>> 6)
+    val words = ink.words
+    val tail = -1L >>> ((64 - (bw & 63)) & 63)
     var y = b.y0
-    while (y < b.y1) { if (ink(y * w + x)) return true; y += 1 }
-    false
+    while (y < b.y1) {
+      var s = y * w + b.x0
+      var j = 0
+      while (j < prof.length) {
+        val wi = s >>> 6
+        val sh = s & 63
+        var v = words(wi) >>> sh
+        if (sh != 0 && wi + 1 < words.length) v |= words(wi + 1) << (64 - sh)
+        prof(j) |= v
+        s += 64
+        j += 1
+      }
+      y += 1
+    }
+    if (prof.nonEmpty) prof(prof.length - 1) &= tail
+    prof
+  }
+
+  @inline private def profileBit(prof: Array[Long], i: Int): Boolean =
+    (prof(i >>> 6) & (1L << i)) != 0
+
+  /** (first, last + 1) set bit of a non-empty profile. */
+  private def profileSpan(prof: Array[Long]): (Int, Int) = {
+    var lo = 0
+    while (prof(lo) == 0) lo += 1
+    var hi = prof.length - 1
+    while (prof(hi) == 0) hi -= 1
+    ((lo << 6) + java.lang.Long.numberOfTrailingZeros(prof(lo)),
+      (hi << 6) + 64 - java.lang.Long.numberOfLeadingZeros(prof(hi)))
   }
 
   /** Smallest box containing all ink in `b`; None when blank. */
@@ -132,10 +226,8 @@ object PageSegment {
     var y0 = b.y0; while (y0 < b.y1 && !rowHasInk(ink, w, b, y0)) y0 += 1
     if (y0 == b.y1) return None
     var y1 = b.y1; while (!rowHasInk(ink, w, b, y1 - 1)) y1 -= 1
-    val vb = Box(b.x0, y0, b.x1, y1)
-    var x0 = b.x0; while (!colHasInk(ink, w, vb, x0)) x0 += 1
-    var x1 = b.x1; while (!colHasInk(ink, w, vb, x1 - 1)) x1 -= 1
-    Some(Box(x0, y0, x1, y1))
+    val (x0, x1) = profileSpan(columnProfile(ink, w, Box(b.x0, y0, b.x1, y1)))
+    Some(Box(b.x0 + x0, y0, b.x0 + x1, y1))
   }
 
   /** Largest all-blank maximal run strictly inside the trimmed box along
@@ -161,7 +253,8 @@ object PageSegment {
       case None => Vector.empty
       case Some(b) =>
         val (ry0, ry1) = largestGap(y => !rowHasInk(ink, w, b, y), b.y0, b.y1)
-        val (cx0, cx1) = largestGap(x => !colHasInk(ink, w, b, x), b.x0, b.x1)
+        val cols = columnProfile(ink, w, b)
+        val (cx0, cx1) = largestGap(x => !profileBit(cols, x - b.x0), b.x0, b.x1)
         val rowGap = if (ry1 - ry0 >= minGapY) ry1 - ry0 else 0
         val colGap = if (cx1 - cx0 >= minGapX) cx1 - cx0 else 0
         // A column cut orders left-before-right, which is reading order
@@ -215,10 +308,8 @@ object PageSegment {
       if (rowHasInk(ink, w, b, y)) {
         val start = y
         while (y < b.y1 && rowHasInk(ink, w, b, y)) y += 1
-        val band = Box(b.x0, start, b.x1, y)
-        var x0 = b.x0; while (!colHasInk(ink, w, band, x0)) x0 += 1
-        var x1 = b.x1; while (!colHasInk(ink, w, band, x1 - 1)) x1 -= 1
-        out += Box(x0, start, x1, y)
+        val (x0, x1) = profileSpan(columnProfile(ink, w, Box(b.x0, start, b.x1, y)))
+        out += Box(b.x0 + x0, start, b.x0 + x1, y)
       } else y += 1
     }
     out.result()

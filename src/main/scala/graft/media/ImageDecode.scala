@@ -242,10 +242,27 @@ object ImageDecode {
     img
   }
 
-  /** Encode RGB pixels with the named ImageIO writer ("png", "jpg"). */
+  /** Encode RGB pixels with the named ImageIO writer ("png", "jpg") — the
+    * writer `ImageIO.write` picks, but through a memory-cached output
+    * stream: `ImageIO.write` to an `OutputStream` spools through a temp
+    * file per call. Empty when no writer handles `format`, like `ImageIO.write`.
+    */
   def encode(d: Decoded, format: String): Array[Byte] = {
+    val img = toBufferedImage(d)
+    val writers = javax.imageio.ImageIO.getImageWriters(
+      javax.imageio.ImageTypeSpecifier.createFromRenderedImage(img), format)
     val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(toBufferedImage(d), format, bos)
+    if (writers.hasNext) {
+      val writer = writers.next()
+      val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+      try {
+        writer.setOutput(ios)
+        writer.write(img)
+      } finally {
+        writer.dispose()
+        ios.close()
+      }
+    }
     bos.toByteArray
   }
 
@@ -291,7 +308,9 @@ object ImageDecode {
     * deterministic (299·r + 587·g + 114·b) / 1000 truncating formula both
     * Python twins pin ([[PHash]] grayscale, [[graft.layout.PageSegment]]
     * ink mask); ONE copy so a rounding tweak cannot desynchronize the two
-    * cross-language contracts.
+    * cross-language contracts. The ink mask tests `lumaInt < 128` in its
+    * division-free form (`… < 128000`); PageSegmentSpec checks it against
+    * this function pixel by pixel.
     */
   @inline def lumaInt(rgb: Array[Byte], o: Int): Int =
     (299 * (rgb(o) & 0xff) + 587 * (rgb(o + 1) & 0xff) +

@@ -157,13 +157,13 @@ object PdfPages {
 
   private[media] def inflate(
       data: Array[Byte], maxBytes: Long = MaxInflateBytes): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(data)
+    val inf = new Inflate(data)
     val out = new java.io.ByteArrayOutputStream(data.length * 4)
     val buf = new Array[Byte](8192)
-    while (!inf.finished()) {
-      val n =
-        try inf.inflate(buf)
+    var n = buf.length
+    while (n == buf.length) {
+      n =
+        try inf.read(buf, 0, buf.length)
         catch {
           // a corrupt deflate body must surface as the typed loud error the
           // ingest/quarantine layer matches on, not a raw checked zip
@@ -172,20 +172,17 @@ object PdfPages {
             throw new IllegalArgumentException(
               s"corrupt Flate stream: ${e.getMessage}")
         }
-      if (n == 0) {
-        // stalled: truncated input, preset-dictionary header, or corrupt
-        if (inf.needsInput() || inf.needsDictionary())
-          throw new IllegalArgumentException("unsupported or truncated Flate stream")
-      }
       out.write(buf, 0, n)
-      // bound the OUTPUT as it grows, before the next inflate round —
+      // bound the OUTPUT as it grows, before the next read —
       // deflate compresses ~1000:1, so a small hostile stream can expand
-      // to gigabytes; the check must not wait for finished()
+      // to gigabytes; the check must not wait for the stream's end
       if (out.size() > maxBytes)
         throw new IllegalArgumentException(
           s"Flate stream inflates past $maxBytes bytes (decompression bomb)")
     }
-    inf.end()
+    // stopped short: the stream ended (trailer checked), or the input did
+    if (!inf.finished)
+      throw new IllegalArgumentException("unsupported or truncated Flate stream")
     out.toByteArray
   }
 

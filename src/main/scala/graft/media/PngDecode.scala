@@ -1,6 +1,6 @@
 package graft.media
 
-import java.util.zip.{CRC32, DataFormatException, Inflater}
+import java.util.zip.{CRC32, DataFormatException}
 
 /** Direct PNG decode into row-major 8-bit RGB with PIL `convert("RGB")`
   * semantics: every legal PNG (colour types 0/2/3/4/6, bit depths
@@ -16,8 +16,11 @@ import java.util.zip.{CRC32, DataFormatException, Inflater}
   * Work is bounded by the header: the [[ImageDecode.MaxPixels]] check runs on
   * IHDR before any byte is inflated, rows are inflated a batch at a time
   * into buffers sized from IHDR, and IDAT data past the declared raster is
-  * rejected after inflating at most one byte of it. All chunk CRCs are
-  * checked. Malformed input only ever throws `IllegalArgumentException`.
+  * rejected after inflating at most one byte of it. The IDAT payloads are
+  * inflated in place by [[Inflate]] (zlib's accept/reject rules; a stream
+  * that simply ends once the raster is complete, with no Adler-32 trailer,
+  * is accepted). All chunk CRCs are checked. Malformed input only ever
+  * throws `IllegalArgumentException`.
   */
 private[media] object PngDecode {
 
@@ -86,8 +89,8 @@ private[media] object PngDecode {
     val crc = new CRC32
     var hdr: Header = null
     var palette: Array[Byte] = null
-    val idat = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)] // (offset, length)
-    var idatDone = false
+    val idatFrom, idatUntil = Array.newBuilder[Int]
+    var seenIdat, idatDone = false
     var pos = 8
     var end = false
     while (!end && pos < b.length) {
@@ -111,49 +114,37 @@ private[media] object PngDecode {
           System.arraycopy(b, data, palette, 0, n)
         case IDAT =>
           if (idatDone) fail("IDAT chunks are not consecutive")
-          idat += ((data, n))
+          idatFrom += data
+          idatUntil += data + n
+          seenIdat = true
         case IEND => end = true
         case _ =>
       }
-      if (idat.nonEmpty && typ != IDAT) idatDone = true
+      if (seenIdat && typ != IDAT) idatDone = true
       pos = data + n + 4
     }
     if (hdr == null) fail("no IHDR")
-    if (idat.isEmpty) fail("no IDAT")
+    if (!seenIdat) fail("no IDAT")
     if (hdr.colorType == 3 && palette == null) fail("palette image without PLTE")
-    inflateRaster(b, hdr, palette, idat)
+    inflateRaster(hdr, palette, new Inflate(b, idatFrom.result(), idatUntil.result()))
   }
 
-  private def inflateRaster(b: Array[Byte], hdr: Header, palette: Array[Byte],
-                            idat: collection.Seq[(Int, Int)]): ImageDecode.Decoded = {
+  private def inflateRaster(hdr: Header, palette: Array[Byte], inf: Inflate): ImageDecode.Decoded = {
     val (w, h) = (hdr.width, hdr.height)
     val out = new Array[Byte](w * h * 3)
-    val inf = new Inflater()
     try {
-      var next = 0
-      def feed(): Boolean =
-        if (next < idat.length) {
-          inf.setInput(b, idat(next)._1, idat(next)._2); next += 1; true
-        } else false
-      def inflateFully(buf: Array[Byte], n: Int): Unit = {
-        var got = 0
-        while (got < n) {
-          val k = inf.inflate(buf, got, n - got)
-          got += k
-          if (k == 0 && got < n) {
-            if (inf.finished()) fail(s"IDAT ends after ${inf.getBytesWritten} bytes, before the raster")
-            if (inf.needsDictionary()) fail("IDAT needs a preset dictionary")
-            if (inf.needsInput() && !feed()) fail(s"IDAT truncated after ${inf.getBytesWritten} bytes")
-          }
+      def inflateFully(buf: Array[Byte], n: Int): Unit =
+        if (inf.read(buf, 0, n) < n) {
+          if (inf.finished) fail(s"IDAT ends after ${inf.totalOut} bytes, before the raster")
+          fail(s"IDAT truncated after ${inf.totalOut} bytes")
         }
-      }
       val passes = if (hdr.interlaced) Adam7 else Array((0, 0, 1, 1))
       var expected = 0L
       passes.foreach { case (x0, y0, dx, dy) =>
         val pw = if (w > x0) (w - x0 + dx - 1) / dx else 0
         val ph = if (h > y0) (h - y0 + dy - 1) / dy else 0
         if (pw > 0 && ph > 0) {
-          // rows are inflated a batch at a time (few Inflater calls, bounded
+          // rows are inflated a batch at a time (few read calls, bounded
           // buffer); `above` holds the row before the batch, zeros at the top
           val rowLen = hdr.rowBytes(pw) + 1
           val batch = math.max(1, math.min(ph, BatchBytes / rowLen))
@@ -179,20 +170,12 @@ private[media] object PngDecode {
       }
       // the raster is complete: any further inflated byte is past what IHDR
       // declared, so stop at the first one instead of inflating the rest
-      val probe = new Array[Byte](1)
-      var stalled = false
-      while (!inf.finished() && !stalled) {
-        val before = inf.getRemaining
-        if (inf.inflate(probe) > 0)
-          fail(s"IDAT inflates past the $expected-byte raster (inflated ${inf.getBytesWritten} bytes)")
-        if (inf.needsDictionary()) fail("IDAT needs a preset dictionary")
-        if (inf.needsInput()) stalled = !feed()
-        else stalled = inf.getRemaining == before
-      }
+      if (inf.read(new Array[Byte](1), 0, 1) > 0)
+        fail(s"IDAT inflates past the $expected-byte raster (inflated ${inf.totalOut} bytes)")
       ImageDecode.Decoded(w, h, out)
     } catch {
       case e: DataFormatException => fail(s"IDAT inflate: ${e.getMessage}")
-    } finally inf.end()
+    }
   }
 
   /** Undo the row filter in place: the row is `len` bytes at `o` (filter

@@ -36,10 +36,19 @@ object XmlFlatten {
       }
     }
 
-  private def removeTag(xml: String, tagName: String): String = {
-    if (!xml.contains("<" + tagName)) return xml
-    val paired = Pattern.compile("<" + tagName + "\\b[^>]*>.*?</" + tagName + ">", Pattern.DOTALL)
-    val selfClosed = Pattern.compile("<" + tagName + "\\b[^>]*/>")
+  /** (open-tag prefix, paired-element pattern, self-closed pattern) for each
+    * tag removed before parsing, compiled once.
+    */
+  private val removedTags: Seq[(String, Pattern, Pattern)] =
+    Seq("Description", "Deletion", "Illegible", "Gap").map { tagName =>
+      ("<" + tagName,
+        Pattern.compile("<" + tagName + "\\b[^>]*>.*?</" + tagName + ">", Pattern.DOTALL),
+        Pattern.compile("<" + tagName + "\\b[^>]*/>"))
+    }
+
+  private def removeTag(xml: String, tag: (String, Pattern, Pattern)): String = {
+    val (open, paired, selfClosed) = tag
+    if (!xml.contains(open)) return xml
     selfClosed.matcher(paired.matcher(xml).replaceAll("")).replaceAll("")
   }
 
@@ -87,7 +96,7 @@ object XmlFlatten {
     if (!xmlContent.contains("HistoricalDocument")) return xmlContent
 
     var content = xmlContent
-    for (tag <- Seq("Description", "Deletion", "Illegible", "Gap"))
+    for (tag <- removedTags)
       content = removeTag(content, tag)
 
     val root: Element =

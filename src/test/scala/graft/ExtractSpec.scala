@@ -42,6 +42,28 @@ class ExtractSpec extends AnyFunSuite {
       OutSpan("text", "First world世界", "", 1)))
   }
 
+  test("layout span: a coordinate past Int range drops its block, not the task") {
+    // `toInt` threw NumberFormatException on 99999999999 and killed the
+    // extract task; the reference's int() + _convert_bbox drops the block
+    val layout =
+      "<|box_start|>99999999999 2 3 4<|box_end|><|ref_start|>text<|ref_end|>bad" +
+        "<|box_start|>100 100 900 200<|box_end|><|ref_start|>text<|ref_end|>kept" +
+        "<|box_start|>1 2 1001 4<|box_end|><|ref_start|>text<|ref_end|>also out of range" +
+        "<|box_start|>0100 220 900 0320<|box_end|><|ref_start|>text<|ref_end|>leading zeros"
+    val blocks = graft.layout.LayoutParse.parse(layout)
+    assert(blocks.map(_.content) == Vector(Some("kept"), Some("leading zeros")))
+    assert(blocks(1).bbox.toSeq == Seq(0.1, 0.22, 0.9, 0.32))
+    assert(Extract.extractDoc(doc("d9", ("layout", layout, ""))).spans ==
+      Seq(OutSpan("text", "kept", "", 0), OutSpan("text", "leading zeros", "", 1)))
+  }
+
+  test("xml span: Description/Deletion/Illegible/Gap elements are removed before parsing") {
+    val xml = "<HistoricalDocument><Description>about</Description><Page><Body>a" +
+      "<Deletion reason=\"x\">gone</Deletion>b<Gap/>c<Illegible n=\"2\"/>" +
+      "<Descriptions>kept</Descriptions></Body></Page></HistoricalDocument>"
+    assert(graft.text.XmlFlatten.extractActualTextFromXml(xml) == "abc\nkept")
+  }
+
   test("equation block combine + wrapping") {
     // combine fires when each equation covers >90% of the equation_block's
     // area (`_mineru25.py:878-882`: cover_ratio(block_bbox, equation_bbox))

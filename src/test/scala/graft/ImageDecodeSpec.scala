@@ -171,7 +171,7 @@ class ImageDecodeSpec extends AnyFunSuite {
   }
 
   test("every PNG colour type, bit depth, interlace, IDAT split and filter decodes to PIL RGB") {
-    assert(pngTypes.size == 20)
+    assert(pngTypes.size == 25)
     pngTypes.foreach { case (name, w, h, sha) =>
       val d = ImageDecode.decode(pngBytes(s"pngtypes/$name.png"))
       assert((d.width, d.height) == ((w, h)), name)
@@ -216,12 +216,31 @@ class ImageDecodeSpec extends AnyFunSuite {
     assert(reason(PngBytes.png(2, 2, 3, 0, new Array[Byte](6))).contains("bit depth 3"))
     assert(reason(PngBytes.png(2, 2, 8, 3, new Array[Byte](6))).contains("without PLTE"))
     assert(reason(ok.take(40)).contains("truncated chunk"))
+    // the IDAT's Adler-32 trailer is checked when present (chunk CRCs fixed)
+    val badAdler = ok.clone(); badAdler(ok.length - 12 - 5) = (badAdler(ok.length - 12 - 5) ^ 1).toByte
+    assert(reason(PngBytes.fixCrcs(badAdler)).contains("incorrect data check"))
   }
 
   test("PNG round-trip: encodePng output decodes back to identical pixels") {
     val d = ImageDecode.Decoded(7, 5, pattern(7, 5, 3))
     val back = ImageDecode.loadImage(ImageDecode.encodePng(d))
     assert(back.width == 7 && back.height == 5 && back.rgb.toSeq == d.rgb.toSeq)
+  }
+
+  test("encode writes the same bytes as ImageIO.write, for PNG and JPEG") {
+    def viaImageIO(d: ImageDecode.Decoded, format: String): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(ImageDecode.toBufferedImage(d), format, bos)
+      bos.toByteArray
+    }
+    val images = ((0 to 4).map(i => f"img_$i%02d.png") ++ pngTypes.map(t => s"pngtypes/${t._1}.png") ++
+      Seq("base", "noise", "vgrad").map(n => s"phash/ph_$n.png")).map(n => ImageDecode.decode(pngBytes(n))) :+
+      graft.jobs.OcrScaleBench.synthPage(7)
+    for (d <- images; format <- Seq("png", "jpg")) {
+      val got = ImageDecode.encode(d, format)
+      assert(got.nonEmpty && java.util.Arrays.equals(got, viaImageIO(d, format)), s"${d.width}x${d.height} $format")
+    }
+    assert(ImageDecode.encode(images.head, "no-such-format").isEmpty)
   }
 
   test("load_image on a real JPEG with spliced EXIF applies the transpose") {

@@ -124,6 +124,140 @@ class PageSegmentSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dn == 20L && ds == 0L)
   }
 
+  private def mix(x0: Long): Long = {
+    var x = x0 + 0x9e3779b97f4a7c15L
+    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
+    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
+    x ^ (x >>> 31)
+  }
+
+  test("ink mask equals the per-pixel luma oracle: 127/128 edges, mixed high bits, odd widths") {
+    // pixels: exact luma-128000 boundaries (just ink / just paper), mixed
+    // high bits within a pixel, runs of all-high and all-low bytes (the
+    // 8-pixel fast paths) and noise
+    def pixel(r: Long): (Int, Int, Int) = ((r >>> 8) % 6).toInt match {
+      case 0 | 1 =>
+        val (rr, gg) = (((r >>> 16) & 0xff).toInt, ((r >>> 24) & 0xff).toInt)
+        val b = Math.floorDiv(128000 - 299 * rr - 587 * gg, 114) + (if ((r & 1) == 0) 0 else 1)
+        if (b >= 0 && b <= 255) (rr, gg, b) else (rr, gg, ((r >>> 32) & 0xff).toInt)
+      case 2 => (128 + ((r >>> 16) & 0x7f).toInt, 128 + ((r >>> 24) & 0x7f).toInt, 128 + ((r >>> 32) & 0x7f).toInt)
+      case 3 => (((r >>> 16) & 0x7f).toInt, ((r >>> 24) & 0x7f).toInt, ((r >>> 32) & 0x7f).toInt)
+      case 4 => (255, ((r >>> 24) & 0x7f).toInt, 0)
+      case _ => (((r >>> 16) & 0xff).toInt, ((r >>> 24) & 0xff).toInt, ((r >>> 32) & 0xff).toInt)
+    }
+    var edges = 0
+    for (w <- Seq(1, 3, 7, 8, 9, 21, 63, 64, 65, 100, 129); h <- Seq(1, 2, 5, 13)) {
+      val rgb = new Array[Byte](w * h * 3)
+      // stretches of one kind, so whole 8-pixel groups take each fast path
+      for (i <- 0 until w * h) {
+        val (r, g, b) = pixel(mix(w * 7919L + h * 104729L + i / 11) ^ i % 11)
+        rgb(3 * i) = r.toByte; rgb(3 * i + 1) = g.toByte; rgb(3 * i + 2) = b.toByte
+        val l = 299 * r + 587 * g + 114 * b
+        if (l == 128000 || l == 127999 || l / 1000 == 127) edges += 1
+      }
+      val ink = PageSegment.inkMask(Decoded(w, h, rgb))
+      assert(ink.words.length == (w * h + 63) / 64)
+      for (i <- 0 until w * h)
+        assert(ink(i) == (graft.media.ImageDecode.lumaInt(rgb, 3 * i) < 128), s"${w}x$h pixel $i")
+      for (i <- w * h until ink.words.length * 64) assert(!ink(i), s"${w}x$h padding bit $i")
+    }
+    assert(edges > 100, s"only $edges pixels at the threshold")
+    // luma 127 and 128 exactly: gray 127 is ink, gray 128 is not
+    val grays = PageSegment.inkMask(Decoded(2, 1, Array[Byte](127, 127, 127, -128, -128, -128)))
+    assert(grays(0) && !grays(1))
+  }
+
+  /** The per-bit column scans `xyCut` and `lineBoxes` used before the
+    * column profile: the oracle for the profile-based versions.
+    */
+  private object PerBit {
+    import PageSegment.{Mask, MinGapX, MinGapY}
+    private def rowInk(ink: Mask, w: Int, b: Box, y: Int): Boolean = (b.x0 until b.x1).exists(x => ink(y * w + x))
+    private def colInk(ink: Mask, w: Int, b: Box, x: Int): Boolean = (b.y0 until b.y1).exists(y => ink(y * w + x))
+    private def trim(ink: Mask, w: Int, b: Box): Option[Box] = {
+      val ys = (b.y0 until b.y1).filter(rowInk(ink, w, b, _))
+      if (ys.isEmpty) None
+      else {
+        val vb = Box(b.x0, ys.head, b.x1, ys.last + 1)
+        val xs = (b.x0 until b.x1).filter(colInk(ink, w, vb, _))
+        Some(Box(xs.head, ys.head, xs.last + 1, ys.last + 1))
+      }
+    }
+    private def gap(blank: Int => Boolean, lo: Int, hi: Int): (Int, Int) = {
+      var best = (0, 0)
+      var i = lo
+      while (i < hi) {
+        if (blank(i)) {
+          val s = i
+          while (i < hi && blank(i)) i += 1
+          if (i - s > best._2 - best._1) best = (s, i)
+        } else i += 1
+      }
+      best
+    }
+    def xyCut(ink: Mask, w: Int, region: Box): Vector[Box] = trim(ink, w, region) match {
+      case None => Vector.empty
+      case Some(b) =>
+        val (ry0, ry1) = gap(y => !rowInk(ink, w, b, y), b.y0, b.y1)
+        val (cx0, cx1) = gap(x => !colInk(ink, w, b, x), b.x0, b.x1)
+        val rowGap = if (ry1 - ry0 >= MinGapY) ry1 - ry0 else 0
+        val colGap = if (cx1 - cx0 >= MinGapX) cx1 - cx0 else 0
+        if (rowGap == 0 && colGap == 0) Vector(b)
+        else {
+          val sides = (trim(ink, w, Box(b.x0, b.y0, cx0, b.y1)), trim(ink, w, Box(cx1, b.y0, b.x1, b.y1)))
+          val useRow = rowGap >= colGap || (rowGap > 0 && (sides match {
+            case (Some(l), Some(r)) => l.y1 <= r.y0 || r.y1 <= l.y0
+            case _ => true
+          }))
+          if (useRow) xyCut(ink, w, Box(b.x0, b.y0, b.x1, ry0)) ++ xyCut(ink, w, Box(b.x0, ry1, b.x1, b.y1))
+          else {
+            val left = xyCut(ink, w, Box(b.x0, b.y0, cx0, b.y1))
+            val right = xyCut(ink, w, Box(cx1, b.y0, b.x1, b.y1))
+            sides match {
+              case (Some(l), Some(r)) if r.y1 <= l.y0 => right ++ left
+              case _ => left ++ right
+            }
+          }
+        }
+    }
+    def lineBoxes(ink: Mask, w: Int, b: Box): Vector[Box] = {
+      val rows = (b.y0 until b.y1).map(rowInk(ink, w, b, _))
+      val out = Vector.newBuilder[Box]
+      var y = b.y0
+      while (y < b.y1) {
+        if (rows(y - b.y0)) {
+          val s = y
+          while (y < b.y1 && rows(y - b.y0)) y += 1
+          out ++= trim(ink, w, Box(b.x0, s, b.x1, y))
+        } else y += 1
+      }
+      out.result()
+    }
+  }
+
+  test("xy-cut and line boxes equal the per-bit column-scan oracle on random masks") {
+    var cuts = 0
+    for (k <- 0 until 60) {
+      val w = Seq(37, 64, 65, 130, 200, 257)(k % 6)
+      val h = 40 + (k * 13) % 90
+      // random bars (blocks with gutters) plus scattered single-pixel specks
+      val bars = (0 until 1 + k % 7).flatMap { j =>
+        val r = mix(k * 1000L + j)
+        val x0 = ((r >>> 1) % w).toInt; val y0 = ((r >>> 20) % h).toInt
+        bar(x0, y0, math.min(w, x0 + 1 + ((r >>> 40) % 50).toInt), math.min(h, y0 + 1 + ((r >>> 50) % 20).toInt))
+      }
+      val specks = (0 until k % 5).map { j => val r = mix(k * 77L + j); (((r >>> 3) % w).toInt, ((r >>> 30) % h).toInt) }
+      val ink = PageSegment.inkMask(page(w, h, bars ++ specks))
+      for (region <- Seq(Box(0, 0, w, h), Box(w / 5, h / 7, w - w / 6, h - 1), Box(1, 0, w / 2 + 1, h))) {
+        val got = PageSegment.xyCut(ink, w, region)
+        assert(got == PerBit.xyCut(ink, w, region), s"xyCut $k $region")
+        if (got.size > 1) cuts += 1
+        for (b <- got :+ region) assert(PageSegment.lineBoxes(ink, w, b) == PerBit.lineBoxes(ink, w, b), s"lines $k $b")
+      }
+    }
+    assert(cuts > 20, s"only $cuts regions were cut")
+  }
+
   test("document page: reading order is a topological order of dominance") {
     val pdf = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/test/resources/media/rasterpdf/raster_01.pdf"))

@@ -11,7 +11,9 @@ Outputs: src/test/resources/media/img_*.png
 
 It also writes one PNG per colour type / bit depth / layout the decoder must
 handle (gray 1/2/4/8/16, gray+alpha, palette with and without tRNS, RGBA8,
-RGB16, RGBA16, Adam7 interlace, multi-IDAT, every row filter 0-4), with the
+RGB16, RGBA16, Adam7 interlace, multi-IDAT, every row filter 0-4, and zlib
+streams with stored blocks, fixed codes, a small window, 1-byte IDAT chunks
+and no Adler-32 trailer), with the
 RGB bytes PIL's `convert("RGB")` yields computed from the source samples:
 gray replicated with no gamma, 1/2/4-bit gray scaled x255/x85/x17, 16-bit
 samples keep the high byte, alpha dropped, tRNS/gAMA/sRGB/iCCP ignored,
@@ -94,10 +96,13 @@ def filter_row(ftype: int, row: bytes, prev: bytes, bpp: int) -> bytes:
     return bytes(out)
 
 
-def encode_png(w, h, depth, ct, px, plte=None, trns=None, extra=(), interlace=False, idat_split=0):
+def encode_png(w, h, depth, ct, px, plte=None, trns=None, extra=(), interlace=False, idat_split=0,
+               compress=None, adler=True):
     """px[y][x] is the tuple of channel samples of one pixel; `extra` chunks go
     before PLTE, tRNS after it. Row filter types cycle 0-4 down each (pass)
-    image, so every fixture walks all five."""
+    image, so every fixture walks all five. `compress` maps the filtered
+    raster to the zlib stream (default: level 9); `adler=False` drops the
+    stream's Adler-32 trailer."""
     bpp = max(1, CHANNELS[ct] * depth // 8)
     passes = ADAM7 if interlace else [(0, 0, 1, 1)]
     raw, k = bytearray(), 0
@@ -111,7 +116,9 @@ def encode_png(w, h, depth, ct, px, plte=None, trns=None, extra=(), interlace=Fa
             prev = prev or bytes(len(row))
             raw += filter_row(k % 5, row, prev, bpp)
             prev, k = row, k + 1
-    z = zlib.compress(bytes(raw), 9)
+    z = (compress or (lambda r: zlib.compress(r, 9)))(bytes(raw))
+    if not adler:
+        z = z[:-4]
     idat = ([chunk(b'IDAT', z[i:i + idat_split]) for i in range(0, len(z), idat_split)]
             + [chunk(b'IDAT', b'')] if idat_split else [chunk(b'IDAT', z)])
     return (b'\x89PNG\r\n\x1a\n'
@@ -176,7 +183,24 @@ def type_fixtures():
         # a 144 kB raster: a decoder that inflates it in pieces must carry the
         # row above across each cut (rows 72 and 144 use Up and Paeth)
         ('large_rgb8', 300, 160, 8, 2, grid(300, 160, 3, 255, 20), None, {}),
+        # zlib edge streams: stored blocks over 64 KiB (a 72 kB raster at
+        # level 0), fixed Huffman codes only, a 512-byte window (CINFO 1),
+        # one IDAT chunk per zlib byte, and a complete raster whose stream
+        # ends without its Adler-32 trailer
+        ('zlib_stored', 150, 160, 8, 2, grid(150, 160, 3, 255, 21), None,
+         dict(compress=lambda r: zlib.compress(r, 0))),
+        ('zlib_fixed', 40, 30, 8, 2, grid(40, 30, 3, 255, 22), None,
+         dict(compress=lambda r: deflate(r, strategy=zlib.Z_FIXED))),
+        ('zlib_wbits9', 200, 40, 8, 2, grid(200, 40, 3, 255, 23), None,
+         dict(compress=lambda r: deflate(r, wbits=9))),
+        ('idat_1byte', 12, 9, 8, 2, grid(12, 9, 3, 255, 24), None, dict(idat_split=1)),
+        ('no_adler', 16, 9, 8, 2, grid(16, 9, 3, 255, 25), None, dict(adler=False)),
     ]
+
+
+def deflate(raw: bytes, wbits=15, strategy=zlib.Z_DEFAULT_STRATEGY) -> bytes:
+    c = zlib.compressobj(9, zlib.DEFLATED, wbits, 9, strategy)
+    return c.compress(raw) + c.flush()
 
 
 def write_type_fixtures():
