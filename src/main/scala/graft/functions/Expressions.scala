@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.GraftShim
 
 /** Static entry points the generated code calls — one virtual-free static
   * call per row keeps the expressions inside whole-stage codegen.
@@ -286,6 +286,13 @@ object ExprImpl {
     java.util.Arrays.fill(sigs, Long.MaxValue)
     val md = md5Local.get()
     val n = words.numElements()
+    // each word's bytes once (null stays null), not once per window
+    val bytes = new Array[Array[Byte]](n)
+    var w = 0
+    while (w < n) {
+      if (!words.isNullAt(w)) bytes(w) = words.getUTF8String(w).getBytes
+      w += 1
+    }
     val last = math.max(n - gramLen, 0)
     val space = Array[Byte](' ')
     var i = 0
@@ -294,9 +301,10 @@ object ExprImpl {
       var k = 0
       var wrote = false
       while (k < gramLen && i + k < n) {
-        if (!words.isNullAt(i + k)) {
+        val b = bytes(i + k)
+        if (b != null) {
           if (wrote) md.update(space)
-          md.update(words.getUTF8String(i + k).getBytes)
+          md.update(b)
           wrote = true
         }
         k += 1
@@ -730,8 +738,8 @@ case class BloomMightContain(left: Expression, right: Expression) extends Binary
 
 /** Column surface + SQL registration. */
 object ChurroFunctions {
-  private def e(c: Column) = ColumnBridge.expression(c)
-  private def col(x: Expression) = ColumnBridge.column(x)
+  private def e(c: Column) = GraftShim.expression(c)
+  private def col(x: Expression) = GraftShim.column(x)
   def churro_normalize(c: Column): Column = col(ChurroNormalize(e(c)))
   def churro_strip_output_tag(c: Column): Column = col(StripOutputTag(e(c)))
   def churro_xml_flatten(c: Column): Column = col(XmlFlattenExpr(e(c)))

@@ -482,6 +482,9 @@ object PdfRaster {
     }
   }
 
+  /** Dash-walk steps allowed per device pixel of the page (see `render`). */
+  private val DashStepsPerPixel = 4L
+
   // one glyph cell (glyph + spacing column), in pixels, at integer scale
   private def cellW(iscale: Int): Int = (GlyphFont.GlyphW + GlyphFont.Spacing) * iscale
 
@@ -666,6 +669,19 @@ object PdfRaster {
     def deviceRing(sub: Sub): IndexedSeq[(Double, Double)] =
       sub.pts.map { case (ux, uy) => (ux * s, hD - uy * s) }.toIndexedSeq
 
+    // One step budget per page for both dash walkers, in device pixels: the
+    // 1e-6 element floor alone still lets `[1e-6 1e-6]` take len/1e-6 steps
+    // per segment, and once a step falls below half an ulp of the walked
+    // distance `t += step` stops advancing at all. Every legitimate pattern
+    // finishes far inside a few steps per page pixel.
+    val dashBudget = DashStepsPerPixel * w.toLong * h
+    var dashSteps = 0L
+    def chargeDashStep(): Unit = {
+      dashSteps += 1
+      if (dashSteps > dashBudget)
+        throw new IllegalArgumentException(s"page $pageNum: dash walk exceeds $dashBudget steps")
+    }
+
     def strokeSubs(subs: Seq[Sub], lwDev: Double, c: (Int, Int, Int),
                    dashDev: IndexedSeq[Double], phaseDev: Double): Unit = {
       require(lwDev > 0, s"page $pageNum: non-positive stroke width $lwDev")
@@ -688,6 +704,7 @@ object PdfRaster {
             val cycle = if (dashDev.length % 2 == 0) totalD else totalD * 2.0
             var pos = phaseDev % cycle
             while (pos >= dashDev(dIdx)) {
+              chargeDashStep()
               pos -= dashDev(dIdx)
               dIdx = (dIdx + 1) % dashDev.length
               dOn = !dOn
@@ -715,6 +732,7 @@ object PdfRaster {
                 // Python-twin order
                 var t = 0.0
                 while (t < len) {
+                  chargeDashStep()
                   val step = if (dRem < len - t) dRem else len - t
                   if (dOn && step > 0.0) {
                     val s0 = t / len; val s1 = (t + step) / len

@@ -39,9 +39,6 @@ object Queries {
     */
   private[graft] def resplitForCpu(spark: SparkSession, df: DataFrame,
                                    minBytes: Long = 4L << 20): DataFrame = {
-    // A/B escape hatch for adjacent-window measurements (BenchExtra only;
-    // the driver never sets it)
-    if (sys.env.contains("GRAFT_NO_RESPLIT")) return df
     val target = spark.sparkContext.defaultParallelism
     // probe the split count via this df's own QueryExecution (`toRdd` is the
     // already-planned physical scan, no action) — the round-3 `df.rdd` probe
@@ -451,12 +448,12 @@ object Queries {
       // LINEAGE CUT: `labels` appears twice per round, so without a cut the
       // logical plan nests exponentially (~2^rounds nodes — measured OOM in
       // plan stringification at round ~20). The InternalRow boundary
-      // ([[org.apache.spark.sql.graftshim.InternalRows.cutLineage]])
+      // ([[org.apache.spark.sql.GraftShim.cutLineage]])
       // flattens each round to a LogicalRDD over the previous round's cached
       // blocks with no external-Row round trip (the round-3 `.rdd` cut
       // deserialized + re-encoded every row every round); at 10^9-node scale
       // the same cut is a reliableCheckpoint to storage.
-      val next = tracked(org.apache.spark.sql.graftshim.InternalRows.cutLineage(
+      val next = tracked(org.apache.spark.sql.GraftShim.cutLineage(
         jumped.coalesce(parts)))
       // convergence = zero changed labels, compared against the carried prev.
       // Overflow-safe at any id scale — the round-3 sum(label)-equality probe
@@ -1626,8 +1623,9 @@ object Queries {
     */
   val NearDupJaccard = 0.7
 
-  /** BenchExtra-only window into the private verify core (same args as the
-    * [[nearDupKeep]] call site) — diagnostics, not a query surface.
+  /** Window into the private verify core (same args as the [[nearDupKeep]]
+    * call site) for stage-split diagnostics (perfbench's traced dataprep
+    * decomposition) — not a query surface.
     */
   private[graft] def jaccardVerifyProbe(grams: DataFrame, pairs: DataFrame): DataFrame =
     jaccardVerify(grams, pairs, NearDupJaccard)

@@ -229,7 +229,8 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hashes = graft.ops.Queries.MinhashHashes
     // edge shapes the fused pass must reproduce: < gramLen words (clipped
     // gram), exactly gramLen, long text, repeated words (duplicate grams),
-    // empty string (split -> [""]), and multi-space runs (empty words)
+    // empty string (split -> [""]), multi-space runs (empty words), and
+    // null words (skipped, as concat_ws skips them), incl. an all-null gram
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon"),
       (2L, "one two"),
@@ -238,13 +239,15 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (5L, "a  b   c"),
       (6L, (0 until 500).map(i => s"w${i % 37}").mkString(" ")),
       (7L, "dup dup dup dup")).toDF("doc_id", "text")
+      .select($"doc_id", split($"text", " ").as("words"))
+      .union(Seq((8L, Seq("p", null, "q", null, null, null, "r")))
+        .toDF("doc_id", "words"))
     val fused = docs
       .withColumn("sigs",
-        ChurroFunctions.minhash_sigs_text(split($"text", " "), 3, hashes, mod))
+        ChurroFunctions.minhash_sigs_text($"words", 3, hashes, mod))
       .select(col("doc_id") +: (0 until hashes).map(j =>
         element_at($"sigs", j + 1).as(s"s$j")): _*)
     val viaGrams = docs
-      .withColumn("words", split($"text", " "))
       .withColumn("grams", expr(
         "array_distinct(transform(sequence(0, greatest(size(words) - 3, 0)), i -> concat_ws(' ', slice(words, i + 1, 3))))"))
       .withColumn("sigs", ChurroFunctions.minhash_sigs($"grams", hashes, mod))

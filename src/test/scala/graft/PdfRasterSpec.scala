@@ -189,6 +189,12 @@ class PdfRasterSpec extends AnyFunSuite {
     // checks but makes no float progress in the phase walker
     // (5.0 - 1e-300 == 5.0) — must reject loudly, not hang an executor
     rejects("[0.0000000001 10] 5 d 10 10 m 20 20 l S", "sub-epsilon dash element")
+    // elements at the epsilon floor still ask for ~5·10^8 walk steps on one
+    // segment: the per-page step budget must reject it quickly
+    val walkT0 = System.nanoTime()
+    rejects("[0.000001 0.000001] 0 d 0 0 m 500 0 l S", "dash walk exceeds")
+    val walkSec = (System.nanoTime() - walkT0) / 1e9
+    assert(walkSec < 2.0, s"dash-walk reject took $walkSec s")
     // a ZERO element stays legal (PDF allows zero spans when not all zero)
     val zeroSpan = PdfRaster.rasterize(tinyPdf("[0 6] 0 d 0 0 0 RG 2 w 10 20 m 40 20 l S"), 72)
     assert(zeroSpan.nonEmpty)

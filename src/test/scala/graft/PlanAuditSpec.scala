@@ -15,6 +15,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * reintroduce anywhere in the catalog without editing the allowlist and
   * justifying the entry.
   *
+  * The same sweep also pins every query's plan SHAPE — its Exchange,
+  * BroadcastExchange, SortMergeJoin and Window counts — against the
+  * committed `src/test/resources/plan_shapes.tsv`, so any plan change shows
+  * in review as a diff of that file. On a mismatch the observed table is
+  * written to `target/plan_shapes.observed.tsv`; when a plan changes on
+  * purpose, copy it over the snapshot in the same change.
+  *
   *  - `CartesianProduct`: a join that lost its equi-condition AND its
   *    broadcast hint — quadratic work on two distributed sides. Never
   *    allowed (a bounded-side cross product plans as
@@ -61,8 +68,17 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     "q_ann_recall", "q_embed_ivf_fixed", "q_embed_lsh_topk",
     "q_embed_topk", "q_image_phash")
 
+  private val shapeCols = Seq("Exchange", "BroadcastExchange", "SortMergeJoin", "Window")
+
   test("no catalog query plans a scale-hostile shape outside the allowlist") {
     val failures = mutable.Buffer.empty[String]
+    val shapes = mutable.Buffer.empty[(String, String)]
+    // q_ann_recall's plan depends on whether this JVM has trained the ANN
+    // centroids yet: a first training inside the query's build materializes
+    // its tracked candidate cache, whose measured size then plans one join
+    // as a sort-merge join instead of a broadcast. Train first, so the
+    // recorded shape does not depend on which suites ran before this one.
+    graft.ops.AnnKMeans.trainCentroids(spark)
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val counts =
         try graft.jobs.PlanAudit.nodeCounts(
@@ -73,6 +89,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
             Map.empty[String, Int]
         }
         finally graft.ops.Queries.releaseCaches()
+      shapes += name -> shapeCols.map(counts.getOrElse(_, 0)).mkString(" ")
       if (counts.contains("CartesianProduct"))
         failures += s"$name: CartesianProduct (join lost its keys AND its broadcast)"
       if (counts.contains("Window") && !windowAllowed(name))
@@ -82,6 +99,25 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(failures.isEmpty,
       s"scale-hostile plan shapes (justify + allowlist, or fix the plan):\n${failures.mkString("\n")}")
+    val committed: Map[String, String] =
+      Option(getClass.getResourceAsStream("/plan_shapes.tsv")).fold(Map.empty[String, String]) { in =>
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().drop(1)
+          .map(_.split('\t')).map(f => f.head -> f.tail.mkString(" ")).toMap
+        finally in.close()
+      }
+    val observed = shapes.toMap
+    val diffs = (committed.keySet ++ observed.keySet).toSeq.sorted
+      .filter(q => committed.get(q) != observed.get(q))
+      .map(q => s"$q: snapshot ${committed.getOrElse(q, "absent")} -> observed ${observed.getOrElse(q, "absent")}")
+    if (diffs.nonEmpty) {
+      val out = java.nio.file.Paths.get("target", "plan_shapes.observed.tsv")
+      java.nio.file.Files.createDirectories(out.getParent)
+      val rows = ("query" +: shapeCols).mkString(" ") +: shapes.map { case (q, c) => s"$q $c" }
+      java.nio.file.Files.write(out, rows.map(_.replace(' ', '\t')).mkString("", "\n", "\n").getBytes("UTF-8"))
+    }
+    assert(diffs.isEmpty,
+      s"plan shapes (${shapeCols.mkString(" ")}) differ from src/test/resources/plan_shapes.tsv " +
+        s"(observed table in target/plan_shapes.observed.tsv):\n${diffs.mkString("\n")}")
     // teardown backstop, same as Bench: the sweep must not leak persists
     assert(graft.ops.CacheTracker.sweepStray() == 0)
   }
